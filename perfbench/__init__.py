@@ -1,0 +1,1 @@
+"""Closed-loop benchmark of the engine; see README.md in this directory."""
