@@ -107,11 +107,14 @@ def tokens(text_col: str | Column, lowercase: bool = True) -> Column:
 
 def ngram_array(toks: Column, n: int) -> Column:
     """Array of the ``size − n + 1`` space-joined word n-grams, built
-    by zip_with over shifted slices. Deliberately NOT
+    by zip_with over shifted slices; ``n == 1`` is the tokens
+    themselves. Deliberately NOT
     ``transform(idx, i -> ... slice(toks, i+1, n))``: a lambda that
     captures the outer array forces the downstream explode off the
     whole-stage-codegen path (measured 6× slower at sf0.1 —
     doc_bigram_lm_logprob went 9.0s → 1.9s on this rewrite alone)."""
+    if n == 1:
+        return toks
     k = F.greatest(F.size(toks) - (n - 1), F.lit(0))
     out = F.slice(toks, 1, k)
     for j in range(1, n):
@@ -166,13 +169,132 @@ def word_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> Data
 
     Built entirely from native array functions (no UDF): tokenize →
     sliding window via zip_with of shifted slices (``ngram_array``) →
-    explode distinct. Documents shorter than ``n`` tokens yield no
-    shingles. Output: (id_col, shingle).
+    explode distinct; ``n == 1`` gives the distinct tokens. Documents
+    shorter than ``n`` tokens yield no shingles. Output: (id_col,
+    shingle).
     """
     toks = tokens(text_col)
     return df.select(
         F.col(id_col),
         F.explode(F.array_distinct(ngram_array(toks, n))).alias("shingle"),
+    )
+
+
+def _postings(
+    df: DataFrame, id_col: str, text_col: str, n: int, tf: bool = False
+) -> DataFrame:
+    """Lazy inverted-index postings, keyed on ``xxhash64`` of the word
+    n-gram (see :func:`_self_join_pairs` for the collision class).
+
+    Sets (default): (id_col, shingle), one row per distinct n-gram of a
+    doc — hashed after the per-doc distinct, so a doc's row count is
+    its exact string-distinct set size. ``tf``: (id_col, shingle, tf),
+    the n-grams counted per (doc, key) without the per-doc distinct.
+    """
+    df = fan_out_narrow_input(df)
+    if not tf:
+        return word_shingles(df, id_col, text_col, n).select(
+            F.col(id_col), F.xxhash64("shingle").alias("shingle")
+        )
+    return (
+        df.select(
+            F.col(id_col), F.explode(ngram_array(tokens(text_col), n)).alias("g")
+        )
+        .select(F.col(id_col), F.xxhash64("g").alias("shingle"))
+        .groupBy(id_col, "shingle")
+        .agg(F.count("*").alias("tf"))
+    )
+
+
+def _hot_keys(posts: DataFrame, df_cap: int) -> DataFrame:
+    """The postings keys held by more than ``df_cap`` docs — at most
+    Σ df / df_cap rows, so it stays small where the allow-list would be
+    vocabulary-sized. Callers drop them with a left anti-join."""
+    return (
+        posts.groupBy("shingle")
+        .agg(F.count("*").alias("df"))
+        .where(F.col("df") > df_cap)
+        .select("shingle")
+    )
+
+
+def _self_join_pairs(
+    posts: DataFrame, id_col: str, df_cap: int | None = None
+) -> DataFrame:
+    """The inverted-index all-pairs kernel behind :func:`jaccard_pairs`,
+    :func:`containment_pairs` and ``similarity.tf_cosine_pairs``.
+
+    ``posts`` come from :func:`_postings`: set rows (id_col, shingle)
+    or tf rows (id_col, shingle, tf). Returns one row per doc pair that
+    shares a key, doc_a < doc_b: (doc_a, doc_b, inter, size_a, size_b)
+    with inter = |A∩B| and size = |A| for sets, inter = Σ tf_a·tf_b and
+    size = ‖v‖² for tf vectors — integer sums, exact under any
+    partitioning. With ``df_cap``, keys held by more
+    than ``df_cap`` docs are dropped from the join only: sizes stay
+    those of the full postings.
+
+    64-bit keys: the join compares ``xxhash64`` keys, not n-gram
+    strings. Equal n-grams always hash equal, so no pair is missed; a
+    collision (odds ~distinct²/2⁶⁴) can only merge two different
+    n-grams across the join, inflating an intersection or, for tf,
+    adding one n-gram's count to another's. Set sizes are counted
+    before hashing and stay exact. There is no exact re-verification —
+    the same class as the ExactSubstr gram hashes and the span probes.
+
+    Eager, not fault-tolerant: the postings are ``localCheckpoint``-ed
+    eagerly when this is called, so building the plan runs a Spark job,
+    and the blocks stay pinned in executor storage until the returned
+    frame is garbage-collected. A local checkpoint keeps
+    no lineage: losing an executor that holds its blocks fails the
+    query instead of recomputing them.
+    """
+    posts = posts.localCheckpoint(eager=True)
+    weighted = "tf" in posts.columns
+    size = F.sum(F.col("tf") * F.col("tf")) if weighted else F.count("*")
+    inter = F.sum(F.col("tf_a") * F.col("tf_b")) if weighted else F.count("*")
+    sizes = posts.groupBy(id_col).agg(size.alias("size"))
+    if df_cap is not None:
+        posts = posts.join(_hot_keys(posts, df_cap), "shingle", "left_anti")
+
+    def side(s: str) -> DataFrame:
+        tf = [F.col("tf").alias(f"tf_{s}")] if weighted else []
+        return posts.select(F.col(id_col).alias(f"doc_{s}"), "shingle", *tf)
+
+    # Pair-key repartition BEFORE the aggregate: a pair's candidate
+    # rows are scattered across key partitions, so a map-side partial
+    # aggregate would compress almost nothing while building a
+    # near-distinct-pair-sized hash table per task; co-locating each
+    # pair first keeps the aggregation hash tables group-sized.
+    # Partition count follows spark.sql.shuffle.partitions.
+    pairs = (
+        side("a")
+        .join(side("b"), "shingle")
+        .where(F.col("doc_a") < F.col("doc_b"))
+        .repartition(F.col("doc_a"), F.col("doc_b"))
+        .groupBy("doc_a", "doc_b")
+        .agg(inter.alias("inter"))
+    )
+    # Sizes re-attach after the aggregate, so the Σdf² candidate rows
+    # never carry them.
+    for s in ("a", "b"):
+        pairs = pairs.join(
+            sizes.select(
+                F.col(id_col).alias(f"doc_{s}"), F.col("size").alias(f"size_{s}")
+            ),
+            f"doc_{s}",
+        )
+    return pairs
+
+
+def _jaccard_above(
+    pairs: DataFrame, left: str, right: str, threshold: float
+) -> DataFrame:
+    """(left, right, jaccard) for the pairs whose Jaccard
+    inter / (size_a + size_b − inter) is at least ``threshold``,
+    rounded to 4 places."""
+    j = F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter"))
+    return pairs.where(j >= threshold).select(
+        left, right, F.round(j, 4).alias("jaccard")
     )
 
 
@@ -196,82 +318,10 @@ def jaccard_pairs(
     ``minhash_lsh_pairs``. NOTE: df_cap changes the measured set, so
     it is an approximation switch, off by default.
 
-    r12: the inverted-index join keys on ``xxhash64(shingle)`` — the
-    shingle strings die in the map-side projection AFTER the per-doc
-    distinct (set sizes stay exact string-distinct counts), so the
-    self-join shuffles and compares 8-byte keys instead of O(n·word)
-    strings (measured 4.9 s → 3.0 s at sf0.1, identical pairs). A
-    64-bit collision can only merge two DIFFERENT shingles across the
-    join (~distinct²/2⁶⁴ odds — the same documented class as the
-    ExactSubstr gram hashes and the span probes); equal shingles
-    always collide equal, so no pair is ever missed.
+    Hash keys and eager materialisation: see :func:`_self_join_pairs`.
     """
-    df = fan_out_narrow_input(df)
-    if n > 1:
-        sh = word_shingles(df, id_col, text_col, n=n)
-    else:
-        sh = df.select(
-            F.col(id_col),
-            F.explode(F.array_distinct(tokens(text_col))).alias("shingle"),
-        )
-    # Postings materialized ONCE (r13, the tf_cosine_pairs shape from
-    # 4f74b78): the (doc, shingle-hash) set used to be inlined into
-    # BOTH self-join sides — each a scan + explode + window (two
-    # exchanges) — and the per-doc set size rode through the Σdf² pair
-    # flow as two extra 8-byte group-key columns. Now the postings
-    # localCheckpoint once (~16 B/row, the sparse set index a
-    # production pipeline persists), set sizes come from a tiny
-    # groupBy of the SAME materialized rows (identical exact
-    # string-distinct counts), and they re-attach by broadcast AFTER
-    # the intersection aggregation.
-    posts = sh.localCheckpoint(eager=True)
-    sizes = posts.groupBy(id_col).agg(F.count("*").alias("set_size"))
-    if df_cap is not None:
-        freq = posts.groupBy("shingle").agg(F.count("*").alias("df"))
-        posts = posts.join(
-            F.broadcast(freq.where(F.col("df") <= df_cap).select("shingle")), "shingle"
-        )
-    a = posts.select(F.col(id_col).alias("doc_a"), "shingle")
-    b = posts.select(F.col(id_col).alias("doc_b"), "shingle")
-    # Pair-key repartition BEFORE the intersection count (r13, guide
-    # §2.5/§2.3, measured on the tf twin): a pair's candidate rows are
-    # scattered across shingle partitions, so the map-side partial
-    # aggregate compresses almost nothing while building a
-    # near-distinct-pair-sized hash table per task; co-locating each
-    # pair first keeps the aggregation hash tables group-sized.
-    # Partition count follows spark.sql.shuffle.partitions.
-    inter = (
-        a.join(b, on="shingle")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .repartition(F.col("doc_a"), F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    joined = inter.join(
-        F.broadcast(
-            sizes.select(
-                F.col(id_col).alias("doc_a"),
-                F.col("set_size").alias("size_a"),
-            )
-        ),
-        "doc_a",
-    ).join(
-        F.broadcast(
-            sizes.select(
-                F.col(id_col).alias("doc_b"),
-                F.col("set_size").alias("size_b"),
-            )
-        ),
-        "doc_b",
-    )
-    return (
-        joined.withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", F.round("jaccard", 4).alias("jaccard"))
-    )
+    pairs = _self_join_pairs(_postings(df, id_col, text_col, n), id_col, df_cap)
+    return _jaccard_above(pairs, "doc_a", "doc_b", threshold)
 
 
 def jaccard_pairs_cross(
@@ -283,8 +333,8 @@ def jaccard_pairs_cross(
     threshold: float = 0.5,
     df_cap: int | None = None,
 ) -> DataFrame:
-    """Exact n-gram Jaccard pairs BETWEEN two disjoint document sets
-    (r6): same inverted-index shape as :func:`jaccard_pairs`, but the
+    """Exact n-gram Jaccard pairs BETWEEN two disjoint document sets:
+    same inverted-index shape as :func:`jaccard_pairs`, but the
     self-join becomes an A-side ⋈ B-side join — the decontamination
     shape, where A is a small benchmark and B the corpus. Candidate
     volume drops from Σ df² over the union to Σ df_A·df_B, i.e. the
@@ -300,63 +350,30 @@ def jaccard_pairs_cross(
     corpus-rare shingles only, while the Jaccard denominators keep
     the FULL set sizes — identical semantics contract to
     :func:`jaccard_pairs`'s cap (pinned vs brute force in
-    tests/test_skew.py). The banned set (ubiquitous shingles) is at
-    most Σ df_b / cap entries — small by construction — so it
-    broadcasts as an anti-join; the allow-list would be
-    vocabulary-sized. Approximation switch, off by default.
+    tests/test_skew.py). Approximation switch, off by default.
+
+    Hash keys: see :func:`_self_join_pairs`.
     """
 
-    def sized_shingles(df: DataFrame) -> DataFrame:
-        df = fan_out_narrow_input(df)
-        if n > 1:
-            sh = word_shingles(df, id_col, text_col, n=n)
-        else:
-            sh = df.select(
-                F.col(id_col),
-                F.explode(F.array_distinct(tokens(text_col))).alias(
-                    "shingle"
-                ),
-            )
-        # 8-byte join keys, exact string-distinct set sizes — the
-        # same r12 trade as jaccard_pairs (see its docstring).
-        sh = sh.select(
-            F.col(id_col), F.xxhash64("shingle").alias("shingle")
-        )
-        return sh.withColumn(
-            "set_size", F.count("*").over(Window.partitionBy(id_col))
+    def sized(df: DataFrame, id_alias: str, size_alias: str) -> DataFrame:
+        return _postings(df, id_col, text_col, n).select(
+            F.col(id_col).alias(id_alias),
+            "shingle",
+            F.count("*").over(Window.partitionBy(id_col)).alias(size_alias),
         )
 
-    a = sized_shingles(df_a).select(
-        F.col(id_col).alias("id_a"), "shingle",
-        F.col("set_size").alias("size_a"),
-    )
-    b = sized_shingles(df_b).select(
-        F.col(id_col).alias("id_b"), "shingle",
-        F.col("set_size").alias("size_b"),
-    )
+    a = sized(df_a, "id_a", "size_a")
+    b = sized(df_b, "id_b", "size_b")
     if df_cap is not None:
-        banned = (
-            b.groupBy("shingle")
-            .agg(F.count("*").alias("df_b"))
-            .where(F.col("df_b") > df_cap)
-            .select("shingle")
-        )
-        a = a.join(F.broadcast(banned), "shingle", "left_anti")
-        b = b.join(F.broadcast(banned), "shingle", "left_anti")
+        banned = _hot_keys(b, df_cap)
+        a = a.join(banned, "shingle", "left_anti")
+        b = b.join(banned, "shingle", "left_anti")
     inter = (
         a.join(b, on="shingle")
         .groupBy("id_a", "id_b", "size_a", "size_b")
         .agg(F.count("*").alias("inter"))
     )
-    return (
-        inter.withColumn(
-            "jaccard",
-            F.col("inter")
-            / (F.col("size_a") + F.col("size_b") - F.col("inter")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
-    )
+    return _jaccard_above(inter, "id_a", "id_b", threshold)
 
 
 def containment_pairs(
@@ -374,66 +391,22 @@ def containment_pairs(
     "A is substantially quoted inside B" (the direction matters, so
     both (a,b) and (b,a) can appear).
 
-    Same inverted-index shape as :func:`jaccard_pairs` — explode to
-    (doc, shingle), self-join on shingle with one reused exchange,
-    count intersections — and since |A∩B| plus BOTH set sizes
-    determine BOTH directions, the join runs CANONICALLY
-    (``doc_a < doc_b``, half the candidate/aggregate rows of the
-    naive ``!=`` join — measured 13.3s → ~10s at sf0.1) and a cheap
-    post-aggregation explode emits the two directed rows, each
-    filtered by its own denominator. Output: (doc_a, doc_b,
-    containment) meaning "doc_a is `containment`-contained in doc_b";
-    both (a,b) and (b,a) can appear.
+    Same inverted-index kernel as :func:`jaccard_pairs`. Since |A∩B|
+    plus BOTH set sizes determine BOTH directions, the join runs
+    canonically (``doc_a < doc_b``, half the candidate and aggregate
+    rows of a ``!=`` join) and a cheap post-aggregation explode emits
+    the two directed rows, each filtered by its own denominator.
+    Output: (doc_a, doc_b, containment) meaning "doc_a is
+    `containment`-contained in doc_b".
 
     Scale: identical posture to jaccard_pairs — hot shingles are the
     quadratic risk; cap document frequency upstream or route through
     the MinHash index for web-scale corpora.
+
+    Hash keys and eager materialisation: see :func:`_self_join_pairs`.
     """
-    df = fan_out_narrow_input(df)
-    if n > 1:
-        sh = word_shingles(df, id_col, text_col, n=n)
-    else:
-        sh = df.select(
-            F.col(id_col),
-            F.explode(F.array_distinct(tokens(text_col))).alias("shingle"),
-        )
-    # Same r13 restructure as jaccard_pairs (see its comment):
-    # postings materialized once, intersection aggregation keyed on
-    # the pair only after a pair-key repartition, exact set sizes
-    # re-attached by broadcast. The postings key is xxhash64(shingle)
-    # — the r12 8-byte-key trade jaccard_pairs documents (equal
-    # shingles always collide equal, so no pair is missed; a 64-bit
-    # collision can only merge two different shingles at
-    # ~distinct²/2⁶⁴ odds), which r12 never applied here.
-    sh = sh.select(F.col(id_col), F.xxhash64("shingle").alias("shingle"))
-    posts = sh.localCheckpoint(eager=True)
-    sizes = posts.groupBy(id_col).agg(F.count("*").alias("set_size"))
-    a = posts.select(F.col(id_col).alias("doc_a"), "shingle")
-    b = posts.select(F.col(id_col).alias("doc_b"), "shingle")
-    inter = (
-        a.join(b, on="shingle")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .repartition(F.col("doc_a"), F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("inter"))
-    ).join(
-        F.broadcast(
-            sizes.select(
-                F.col(id_col).alias("doc_a"),
-                F.col("set_size").alias("size_a"),
-            )
-        ),
-        "doc_a",
-    ).join(
-        F.broadcast(
-            sizes.select(
-                F.col(id_col).alias("doc_b"),
-                F.col("set_size").alias("size_b"),
-            )
-        ),
-        "doc_b",
-    )
-    directed = inter.select(
+    pairs = _self_join_pairs(_postings(df, id_col, text_col, n), id_col)
+    directed = pairs.select(
         F.explode(
             F.array(
                 F.struct(
@@ -811,7 +784,7 @@ def jaccard_pairs_prefix(
     IDENTICAL to :func:`jaccard_pairs`: prefix filtering only shrinks
     the candidate set, never the answer.
 
-    Order all shingles by (document frequency asc, shingle); a pair
+    Order all shingles by (document frequency asc, shingle key); a pair
     with J ≥ t must share a shingle within each side's first
     ``|X| − ⌊t·|X|⌋ + 1`` shingles of that order (rare-first makes the
     guaranteed-shared element cheap to join on). So the inverted-index
@@ -842,15 +815,10 @@ def jaccard_pairs_prefix(
     pick it over the full join only when the df histogram has a rare
     tail, and prefer ``df_cap``/MinHash when approximation is
     acceptable.
+
+    Hash keys: see :func:`_self_join_pairs`.
     """
-    df = fan_out_narrow_input(df)
-    if n > 1:
-        sh = word_shingles(df, id_col, text_col, n=n)
-    else:
-        sh = df.select(
-            F.col(id_col),
-            F.explode(F.array_distinct(tokens(text_col))).alias("shingle"),
-        )
+    sh = _postings(df, id_col, text_col, n)
     freq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
     ranked = (
         sh.join(freq, "shingle")
@@ -898,14 +866,7 @@ def jaccard_pairs_prefix(
         .groupBy("doc_a", "doc_b", "size_a", "size_b")
         .agg(F.count("*").alias("inter"))
     )
-    return (
-        inter.withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", F.round("jaccard", 4).alias("jaccard"))
-    )
+    return _jaccard_above(inter, "doc_a", "doc_b", threshold)
 
 
 def positional_shingles(

@@ -986,93 +986,22 @@ def tf_cosine_pairs(
     squared norms are INTEGER sums (order-independent under any
     partitioning), and only the final sqrt/divide touch doubles —
     bit-identical IEEE ops on both engines, so the DuckDB oracle
-    hash-matches without tolerance.
+    hash-matches without tolerance. Output: (doc_a, doc_b, cosine_tf),
+    doc_a < doc_b. Hot grams are the quadratic risk at 100 TB, exactly
+    as in jaccard_pairs — cap gram document frequency upstream or
+    screen through the MinHash index first.
 
-    Plan (r13): non-distinct n-gram explode → (doc, gram, tf)
-    partial-agg groupBy → the tf frame MATERIALIZED once
-    (localCheckpoint; it is exactly the sparse tf index a production
-    pipeline persists — ~16 B/posting, document-length independent) →
-    inverted-index self-join on the gram → integer dot agg keyed on
-    (doc_a, doc_b) ONLY → broadcast re-attach of the tiny per-doc
-    norms. Before r13 the tf subtree (scan + explode + two exchanges
-    + a window) was inlined TWICE (both join sides) and every one of
-    the Σdf² candidate rows carried both 8-byte norms through the
-    partial/final dot aggregation as extra group-key columns; now the
-    subtree runs once and the pair flow carries two ids + two tfs.
-    Norms are integer sums of the SAME materialized tf rows the
-    window used to sum, so every value is unchanged. Output:
-    (doc_a, doc_b, cosine_tf), doc_a < doc_b. Hot grams are the
-    quadratic risk at 100 TB, exactly as in jaccard_pairs — cap gram
-    document frequency upstream or screen through the MinHash index
-    first.
+    Hash keys and eager materialisation: see
+    ``dedup._self_join_pairs``.
     """
-    from .dedup import fan_out_narrow_input, ngram_array, tokens
+    from .dedup import _postings, _self_join_pairs
 
-    df = fan_out_narrow_input(df)
-    toks = tokens(text_col)
-    # zip_with construction (dedup.ngram_array), never an
-    # outer-capture transform lambda — that knocks the explode off
-    # whole-stage codegen (6x, see ngram_array's docstring).
-    # r12: the tf key and the inverted-index join key is
-    # xxhash64(gram) — gram strings die in the map-side projection,
-    # so the (doc, gram) aggregation and the self-join shuffle 8-byte
-    # keys instead of O(n·word) strings. Equal grams always collide
-    # equal; a 64-bit collision (~distinct²/2⁶⁴, the documented
-    # ExactSubstr-gram class) could only merge two different grams'
-    # term frequencies.
-    grams = ngram_array(toks, n) if n > 1 else toks
-    tf = (
-        df.select(F.col(id_col), F.explode(grams).alias("_g"))
-        .select(F.col(id_col), F.xxhash64("_g").alias("gram"))
-        .groupBy(id_col, "gram")
-        .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=True)
+    pairs = _self_join_pairs(
+        _postings(df, id_col, text_col, n, tf=True), id_col
     )
-    # Integer ‖v‖² per doc from the materialized postings — the same
-    # rows the pre-r13 window summed, so the value is identical
-    # (order-free integer sum); docs × 16 B, broadcast-sized by
-    # construction relative to the pair flow.
-    norms = tf.groupBy(id_col).agg(
-        F.sum(F.col("tf") * F.col("tf")).alias("nsq")
-    )
-    a = tf.select(
-        F.col(id_col).alias("doc_a"), "gram", F.col("tf").alias("tf_a")
-    )
-    b = tf.select(
-        F.col(id_col).alias("doc_b"), "gram", F.col("tf").alias("tf_b")
-    )
-    # Explicit pair-key repartition BEFORE the dot aggregation (r13,
-    # guide §2.5 skew/§2.3): a pair's candidate rows are scattered
-    # across gram partitions (one row per shared gram, placed by the
-    # gram hash), so the map-side partial aggregate compresses almost
-    # nothing while building a near-distinct-pair-sized hash table per
-    # task (spill/sort fallback at Σdf² volume — measured 21-23 s →
-    # 11-13 s for the agg at sf0.1). Repartitioning by the pair first
-    # makes every pair's rows co-located, so the aggregation hash
-    # tables stay group-sized. Partition count follows
-    # spark.sql.shuffle.partitions (scale-adaptive, AQE-coalescible).
-    dots = (
-        a.join(b, on="gram")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .repartition(F.col("doc_a"), F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.sum(F.col("tf_a") * F.col("tf_b")).alias("dot"))
-    )
-    joined = dots.join(
-        F.broadcast(
-            norms.select(F.col(id_col).alias("doc_a"), F.col("nsq").alias("nsq_a"))
-        ),
-        "doc_a",
-    ).join(
-        F.broadcast(
-            norms.select(F.col(id_col).alias("doc_b"), F.col("nsq").alias("nsq_b"))
-        ),
-        "doc_b",
-    )
-    cos = F.col("dot") / (F.sqrt("nsq_a") * F.sqrt("nsq_b"))
-    return (
-        joined.where(cos >= threshold)
-        .select("doc_a", "doc_b", F.round(cos, 4).alias("cosine_tf"))
+    cos = F.col("inter") / (F.sqrt("size_a") * F.sqrt("size_b"))
+    return pairs.where(cos >= threshold).select(
+        "doc_a", "doc_b", F.round(cos, 4).alias("cosine_tf")
     )
 
 

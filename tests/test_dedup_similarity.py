@@ -631,6 +631,46 @@ def test_jaccard_pairs_cross_equals_filtered_full(spark):
     assert cross == full and cross
 
 
+_PAIR_OPS = {
+    "jaccard_pairs": lambda d: dedup.jaccard_pairs(d, "doc_id", "text"),
+    "jaccard_pairs_df_cap": lambda d: dedup.jaccard_pairs(
+        d, "doc_id", "text", df_cap=2
+    ),
+    "containment_pairs": lambda d: dedup.containment_pairs(d, "doc_id", "text"),
+    "tf_cosine_pairs": lambda d: similarity.tf_cosine_pairs(d, "doc_id", "text"),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_PAIR_OPS))
+def test_pair_kernel_postings_are_64_bit_and_unhinted(spark, op):
+    """The self-join pair ops share one kernel: the materialised
+    postings (the LogicalRDD leaves of the analyzed plan) hold only
+    64-bit columns — doc id, xxhash64 key and, for tf, the count — and
+    no join carries a forced broadcast hint, so AQE picks the strategy
+    for the docs-sized re-attach and the df_cap banned set."""
+    docs = spark.sql(
+        "SELECT * FROM VALUES "
+        + ", ".join(f"({i}L, '{t}')" for i, t in DOCS)
+        + " AS t(doc_id, text)"
+    )
+    analyzed = _PAIR_OPS[op](docs)._jdf.queryExecution().analyzed()
+    leaves = analyzed.collectLeaves()
+    postings = [
+        leaves.apply(i)
+        for i in range(leaves.length())
+        if leaves.apply(i).nodeName() == "LogicalRDD"
+    ]
+    assert postings
+    for leaf in postings:
+        out = leaf.output()
+        types = {
+            out.apply(i).name(): out.apply(i).dataType().simpleString()
+            for i in range(out.length())
+        }
+        assert set(types.values()) == {"bigint"}, types
+    assert "strategy=broadcast" not in analyzed.toString()
+
+
 @pytest.mark.exhaustive
 def test_ngram_array_doubling_equals_linear(spark):
     """The binary-doubling n-gram builder is value-identical to the

@@ -10,6 +10,9 @@ from __future__ import annotations
 import pytest
 
 import datetime as dt
+import math
+from collections import Counter
+from decimal import ROUND_HALF_UP, Decimal
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -453,7 +456,7 @@ def test_connected_components_match_union_find(spark, pairs):
     assert got == want
 
 
-# --- jaccard_pairs vs brute force ----------------------------------------
+# --- inverted-index pair kernel vs brute force ---------------------------
 
 jdocs_strategy = st.lists(
     st.lists(
@@ -463,15 +466,19 @@ jdocs_strategy = st.lists(
 )
 
 
-def _brute_jaccard(docs, n=2, threshold=0.2):
-    def shingles(text):
-        toks = [t for t in text.strip().lower().split() if t]
-        return {
-            " ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)
-        }
+def _grams(text, n):
+    toks = [t for t in text.strip().lower().split() if t]
+    return [" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)]
 
+
+def _round4(x):
+    """Spark's round(double, 4): HALF_UP on the shortest decimal repr."""
+    return float(Decimal(repr(x)).quantize(Decimal("0.0001"), ROUND_HALF_UP))
+
+
+def _brute_jaccard(docs, n=2, threshold=0.2):
     out = {}
-    ss = [shingles(t) for t in docs]
+    ss = [set(_grams(t, n)) for t in docs]
     for i in range(len(docs)):
         for j in range(i + 1, len(docs)):
             if not ss[i] or not ss[j]:
@@ -485,20 +492,48 @@ def _brute_jaccard(docs, n=2, threshold=0.2):
     return out
 
 
-@given(docs=jdocs_strategy)
+def _brute_tf_cosine(docs, n, threshold):
+    vs = [Counter(_grams(t, n)) for t in docs]
+    out = {}
+    for i in range(len(docs)):
+        for j in range(i + 1, len(docs)):
+            dot = sum(c * vs[j][g] for g, c in vs[i].items())
+            if dot == 0:
+                continue
+            cos = dot / (
+                math.sqrt(sum(c * c for c in vs[i].values()))
+                * math.sqrt(sum(c * c for c in vs[j].values()))
+            )
+            if cos >= threshold:
+                out[(i, j)] = _round4(cos)
+    return out
+
+
+@given(docs=jdocs_strategy, n=st.sampled_from([1, 2]))
 @SET
-def test_jaccard_pairs_match_brute_force(spark, docs):
-    from reddit_hn_etl_spark.operators.dedup import jaccard_pairs
+def test_jaccard_pairs_match_brute_force(spark, docs, n):
+    """The three self-join pair ops share one kernel; each is checked
+    against its own brute-force model."""
+    from reddit_hn_etl_spark.operators.dedup import (
+        containment_pairs,
+        jaccard_pairs,
+    )
+    from reddit_hn_etl_spark.operators.similarity import tf_cosine_pairs
 
     df = spark.createDataFrame(
         list(enumerate(docs)), "doc_id long, text string"
     )
-    got = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in jaccard_pairs(df, "doc_id", "text", n=2,
-                               threshold=0.2).collect()
-    }
-    assert got == _brute_jaccard(docs)
+    for op, col, want in (
+        (jaccard_pairs, "jaccard", _brute_jaccard(docs, n, 0.2)),
+        (containment_pairs, "containment",
+         _brute_containment(list(enumerate(docs)), 0.2, n)),
+        (tf_cosine_pairs, "cosine_tf", _brute_tf_cosine(docs, n, 0.2)),
+    ):
+        got = {
+            (r.doc_a, r.doc_b): r[col]
+            for r in op(df, "doc_id", "text", n=n, threshold=0.2).collect()
+        }
+        assert got == want, op.__name__
 
 
 @given(pairs=edges_strategy)
@@ -555,10 +590,8 @@ def test_triangle_stats_match_bruteforce(spark, pairs):
     assert got == _brute_triangles(pairs or [(0, 1)])
 
 
-def _brute_containment(docs, threshold):
-    grams = {
-        i: set(t.lower().split()) for i, t in docs
-    }
+def _brute_containment(docs, threshold, n=1):
+    grams = {i: set(_grams(t, n)) for i, t in docs}
     out = {}
     for a, sa in grams.items():
         for b, sb in grams.items():
