@@ -1,26 +1,75 @@
-"""Connected components on DataFrames: transitive dedup clusters.
+"""Graph operators on DataFrames: connected components and transitive
+dedup clusters, triangle census, PageRank, BFS, label propagation,
+k-core and weighted shortest paths.
 
 Near-duplicate detection yields PAIRS; correct dedup needs CLUSTERS
-(a~b, b~c ⇒ {a,b,c} keep one). This module computes connected
-components with the iterated min-label propagation ("hash-to-min"
-style) entirely in DataFrame algebra — no GraphFrames dependency, no
-driver-side graph:
+(a~b, b~c ⇒ {a,b,c} keep one). ``connected_components`` computes them
+by iterated min-label propagation with pointer jumping, entirely in
+DataFrame algebra — no GraphFrames dependency, no driver-side graph.
 
-    label(v) ← min(label(v), min over neighbors' labels)
-
-repeated until no label changes. Each iteration is one join + one
-aggregation (two shuffles); convergence takes O(diameter) iterations
-— near-dup graphs are unions of small cliques, so diameter is tiny
-(2-3). A ``max_iter`` guard bounds pathological chains; for
-chain-heavy graphs ``connected_components_star`` below implements the
-alternating large-star/small-star contraction (O(log n) rounds) with
-the identical output contract.
+The operators that iterate to a fixpoint (``connected_components``,
+``kcore``, ``bellman_ford``) share one loop, ``_fixpoint``: one job
+per round, an exact 1-row probe, and a RuntimeError when the round
+budget runs out. ``bfs_distances`` and ``label_propagation`` run a
+fixed round count instead.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
+
+
+def _edge_set(
+    edges: DataFrame, src: str, dst: str, undirected: bool
+) -> DataFrame:
+    """(src, dst): the distinct edge list, both directions when
+    ``undirected``, materialised once. Every round re-reads it, and
+    ``edges`` may itself be an expensive pipeline (the near-dup
+    candidate join) that must not be recomputed per round."""
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    if undirected:
+        e = e.unionByName(
+            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+    return e.distinct().localCheckpoint(eager=True)
+
+
+def _fixpoint(
+    frame: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    probe: list[Column],
+    max_rounds: int,
+    op: str,
+) -> DataFrame:
+    """Apply ``step`` until the 1-row aggregate of ``probe`` repeats;
+    return the frame of the round that repeated it.
+
+    Each round's frame is checkpointed lazily, so the probe's single
+    job both computes the round and materialises it: the next round
+    reads those blocks instead of re-running the lineage, at one job
+    per round. ``localCheckpoint`` keeps the blocks in executor storage
+    only — it is not fault tolerant, and losing an executor fails the
+    query rather than recomputing the lost rounds.
+
+    The probe is exact, not a checksum, when ``step`` is monotone and
+    the probe strictly monotone in it (a row count over a set that only
+    shrinks or only grows, a sum over values that never increase): an
+    unchanged row then means an unchanged frame. Raises RuntimeError
+    when ``max_rounds`` rounds pass without a fixpoint, so a partial
+    result never passes as the answer.
+    """
+    prev = None
+    for _ in range(max_rounds):
+        frame = step(frame).localCheckpoint(eager=False)
+        row = frame.agg(*probe).collect()[0]
+        if row == prev:
+            return frame
+        prev = row
+    raise RuntimeError(f"{op}: no fixpoint within {max_rounds} rounds")
 
 
 def connected_components(
@@ -32,81 +81,47 @@ def connected_components(
     """(vertex, component) for every vertex in ``edges``; component =
     the minimum vertex id reachable from it.
 
-    Deterministic: labels are ids, min is order-free.
+    Each round is a neighbor-min pass, label(v) ← min(label(v), labels
+    of v's neighbors), then a pointer jump, label(v) ← label(label(v)).
+    Neighbor-min alone needs O(diameter) rounds (the semantic-dedup
+    similarity graph has diameter ~12); the jump cuts that to
+    O(log diameter). Labels only ever take ids from v's own component
+    and never increase, so the fixpoint is the component minimum and
+    Σ component is an exact probe; summed as decimal(38,0), it cannot
+    overflow below ~10^19 vertices, whatever the bigint ids.
+    Deterministic: labels are ids, min is order-free. Raises RuntimeError when ``max_iter``
+    rounds do not reach the fixpoint.
     """
-    # Materialize the symmetric edge set ONCE: it is re-read every
-    # round, and `edges` may itself be an expensive pipeline (the
-    # near-dup candidate join in curate_documents) that must not be
-    # recomputed per iteration.
-    sym = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .unionByName(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    labels = sym.select(F.col("u").alias("vertex")).distinct().select(
+    sym = _edge_set(edges, src, dst, undirected=True)
+    labels = sym.select(F.col("src").alias("vertex")).distinct().select(
         "vertex", F.col("vertex").alias("component")
     )
 
-    prev_sum: int | None = None
-    for _ in range(max_iter):
-        # neighbor-min pass: smallest label among each vertex's
-        # neighborhood (including itself)
+    def step(labels: DataFrame) -> DataFrame:
         neigh = (
-            sym.join(labels, sym.v == labels.vertex)
-            .select(F.col("u").alias("vertex"), F.col("component"))
+            sym.join(labels, sym.dst == labels.vertex)
+            .select(F.col("src").alias("vertex"), F.col("component"))
             .unionByName(labels)
             .groupBy("vertex")
             .agg(F.min("component").alias("component"))
         )
-        # Pointer-jumping pass (r13): follow each label's OWN label —
-        # label(v) ← label(label(v)) — the classic path-halving
-        # accelerant. Plain neighbor-min needs O(diameter) rounds and
-        # the semantic-dedup similarity graph measured diameter ~12
-        # (14 rounds at sf0.1, ~0.4 s/round of pure round latency);
-        # with compression labels reach the component minimum in
-        # O(log diameter) rounds. Both invariants that make the
-        # fixpoint the min reachable id survive: label(v) stays inside
-        # v's component (labels only ever take member ids, and
-        # label(label(v)) is reachable from v by transitivity) and
-        # stays monotone non-increasing (the jump target is itself a
-        # min over a set containing the old value). A stalled Σ means
-        # neither pass changed anything — labels are neighbor-min
-        # stable, hence constant per component and equal to the min id
-        # (same convergence argument as before). `neigh` is inlined
-        # twice below; per round that recomputes one tiny join+agg —
-        # rounds are latency-bound, not compute-bound, which is the
-        # point of trading a second reference for fewer rounds.
-        jumped = (
-            neigh.join(
-                neigh.select(
-                    F.col("vertex").alias("_lv"),
-                    F.col("component").alias("_lc"),
-                ),
-                F.col("component") == F.col("_lv"),
-                "left",
-            )
-            .select(
-                "vertex",
-                F.coalesce("_lc", "component").alias("component"),
-            )
-        )
-        # Lazy checkpoint + probe in ONE job (r13): the eager
-        # checkpoint ran a materialization job and the Σ probe ran a
-        # second one per round; marking the checkpoint lazy lets the
-        # probe's aggregate materialize (and persist) the round's
-        # labels in the same job. Labels stay monotone non-increasing,
-        # so Σcomponent is strictly decreasing until the fixpoint: an
-        # unchanged sum IS convergence.
-        new_labels = jumped.localCheckpoint(eager=False)
-        new_sum = new_labels.agg(
-            F.sum("component").cast("long").alias("s")
-        ).collect()[0]["s"]
-        labels = new_labels
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    return labels
+        # `neigh` is read twice, so each round recomputes one small
+        # join + agg: rounds are latency-bound, and the jump saves rounds
+        return neigh.join(
+            neigh.select(
+                F.col("vertex").alias("_lv"), F.col("component").alias("_lc")
+            ),
+            F.col("component") == F.col("_lv"),
+            "left",
+        ).select("vertex", F.coalesce("_lc", "component").alias("component"))
+
+    return _fixpoint(
+        labels,
+        step,
+        [F.sum(F.col("component").cast("decimal(38,0)"))],
+        max_iter,
+        "connected_components",
+    )
 
 
 def dedup_clusters(
@@ -158,110 +173,6 @@ def keep_best_per_cluster(
         "component",
         score_col,
         (F.row_number().over(w) == 1).alias("is_rep"),
-    )
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce
-    and Beyond", SoCC 2014) — the O(log n)-round alternative to
-    ``connected_components``'s O(diameter) min-label propagation.
-
-    Each round is two passes over the edge set; every pass is one
-    symmetric-neighborhood groupBy (min per node) + a filtered emit:
-
-      * large-star: every neighbor v > u repoints to
-        m(u) = min(N(u) ∪ {u})
-      * small-star: every neighbor v ≤ u, and u itself, repoints to m(u)
-
-    The edge set contracts toward per-component stars centered on the
-    min id; convergence = edge-set fixpoint (checksum + count probe on
-    the checkpointed frame). Labels then read directly off the stars.
-
-    Use when components can be long chains (lineage graphs, link
-    graphs): min-label needs O(diameter) rounds there, the star
-    algorithm O(log n). For near-dup cliques (diameter 2-3) min-label
-    wins on constant factors. Output: (vertex, component) — identical
-    contract, cross-checked in tests.
-    """
-    e = (
-        edges.select(
-            F.greatest(F.col(src), F.col(dst)).alias("u"),
-            F.least(F.col(src), F.col(dst)).alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    verts = (
-        edges.select(F.col(src).alias("x"))
-        .unionByName(edges.select(F.col(dst).alias("x")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    def _star(frame: DataFrame, large: bool) -> DataFrame:
-        sym = frame.unionByName(
-            frame.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        mins = sym.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        j = sym.join(mins, "u")
-        if large:
-            out = j.where(F.col("v") > F.col("u")).select("v", "m")
-        else:
-            out = j.where(F.col("v") <= F.col("u")).select("v", "m").unionByName(
-                mins.select(F.col("u").alias("v"), "m")
-            )
-        return (
-            out.select(
-                F.greatest(F.col("v"), F.col("m")).alias("u"),
-                F.least(F.col("v"), F.col("m")).alias("v"),
-            )
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    def _probe(frame: DataFrame) -> tuple[int, int]:
-        # bit_xor: order-independent set checksum that cannot overflow
-        # (sum(hash) trips ANSI long-overflow on adversarial inputs)
-        row = frame.agg(
-            F.count("*").alias("n"),
-            F.bit_xor(F.xxhash64("u", "v")).alias("h"),
-        ).collect()[0]
-        return row["n"], row["h"]
-
-    prev = None
-    for _ in range(max_iter):
-        # lazy checkpoint + probe in one job (r13): the probe's
-        # count/xor aggregate materializes (and persists) the round's
-        # edge set itself — one driver job per round instead of two.
-        e = _star(_star(e, large=True), large=False).localCheckpoint(
-            eager=False
-        )
-        cur = _probe(e)
-        if cur == prev:
-            break
-        prev = cur
-
-    sym = e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    labels = sym.groupBy("u").agg(
-        F.least(F.min("v"), F.first("u")).alias("component")
-    )
-    return (
-        verts.join(labels, verts.x == labels.u, "left")
-        .select(
-            F.col("x").alias("vertex"),
-            F.coalesce("component", F.col("x")).alias("component"),
-        )
     )
 
 
@@ -497,10 +408,7 @@ def bfs_distances(
     float policy at all; the DuckDB oracle is the textbook bounded
     recursive CTE with MIN(d) GROUP BY v.
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if undirected:
-        e = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    e = e.distinct().localCheckpoint(eager=True)
+    e = _edge_set(edges, src, dst, undirected)
     settled = (
         seeds.select(F.col(seed_col).alias("vertex"))
         .distinct()
@@ -509,13 +417,9 @@ def bfs_distances(
     )
     frontier = settled
     for hop in range(1, max_hops + 1):
-        # Lazy checkpoints (r13): BFS runs a FIXED hop count with no
-        # per-round convergence probe, so nothing needs per-round
-        # materialization — the caller's first action computes the
-        # whole unrolled expansion in ONE job while each hop's
-        # checkpoint still cuts the logical plan (round i's plan reads
-        # round i−1's RDD scan, not its lineage). Eager mode paid two
-        # materialization jobs per hop of pure scheduling latency.
+        # Lazy checkpoints: a fixed hop count needs no per-round job —
+        # the caller's action runs every hop in one job, while each
+        # checkpoint still cuts the plan so hop i reads hop i−1's blocks.
         nxt = (
             frontier.join(e, frontier["vertex"] == e["src"])
             .select(F.col("dst").alias("vertex"))
@@ -550,12 +454,7 @@ def label_propagation(
     connected components / PageRank, checkpointed per round.
     Returns (vertex, community) after exactly ``n_iter`` rounds.
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if undirected:
-        e = e.union(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-    e = e.distinct().localCheckpoint(eager=True)
+    e = _edge_set(edges, src, dst, undirected)
     labels = (
         e.select(F.col("src").alias("vertex"))
         .distinct()
@@ -576,9 +475,7 @@ def label_propagation(
             counts.withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
             .select("vertex", "community")
-            # lazy (r13): fixed round count, no convergence probe —
-            # the caller's action materializes all rounds in one job
-            # while each round's checkpoint still cuts the plan
+            # lazy, as in bfs_distances: fixed round count, no probe
             .localCheckpoint(eager=False)
         )
     return labels
@@ -597,15 +494,13 @@ def kcore(
 
     Input edges are treated as UNDIRECTED (symmetrized + dedup'd
     here); output is one row per surviving vertex with its degree
-    inside the core. Per round: one degree aggregate + one semi-join
-    filter — the CC/PageRank round budget — with the edge frame
-    localCheckpoint-ed so round i never re-executes rounds < i. The
-    driver-side convergence probe reads ONE count per round (same
-    pattern as connected_components; the previous round's count is
-    carried forward, never recounted). Rounds needed ≤ the peel depth
-    (graph-dependent, log-ish on real co-occurrence graphs); raises
-    if max_rounds is hit without convergence so a silent partial
-    peel can never masquerade as the core.
+    inside the core. Per round: one degree aggregate + two semi-join
+    filters, iterated by ``_fixpoint`` with the edge count as probe —
+    the edge set only shrinks, so an unchanged count means nothing was
+    peeled. Rounds needed ≤ the peel depth + 1 (graph-dependent,
+    log-ish on real co-occurrence graphs); raises RuntimeError if
+    max_rounds is hit without convergence, so a partial peel never
+    masquerades as the core.
 
     ``canonical=True`` asserts the caller's edges are already
     deduplicated with ``src < dst`` per row — then the symmetrized
@@ -632,28 +527,20 @@ def kcore(
             .distinct()
             .localCheckpoint(eager=True)
         )
-    prev = e.count()
-    for _ in range(max_rounds):
+
+    def step(e: DataFrame) -> DataFrame:
         deg = e.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
         keep = deg.where(F.col("deg") >= k).select("s")
-        # lazy checkpoint + count probe in one job (r13): the eager
-        # materialization job and the count job per round fuse — the
-        # count computes (and persists) the round's edge set itself.
-        e2 = (
-            e.join(keep, "s", "left_semi")
-            .join(keep.select(F.col("s").alias("d")), "d", "left_semi")
-            .localCheckpoint(eager=False)
+        return e.join(keep, "s", "left_semi").join(
+            keep.select(F.col("s").alias("d")), "d", "left_semi"
         )
-        after = e2.count()
-        e = e2
-        if after == prev:
-            return (
-                e.groupBy("s")
-                .agg(F.count(F.lit(1)).alias("core_degree"))
-                .select(F.col("s").alias("vertex"), "core_degree")
-            )
-        prev = after
-    raise RuntimeError(f"kcore: no fixpoint within {max_rounds} rounds")
+
+    core = _fixpoint(e, step, [F.count(F.lit(1))], max_rounds, "kcore")
+    return (
+        core.groupBy("s")
+        .agg(F.count(F.lit(1)).alias("core_degree"))
+        .select(F.col("s").alias("vertex"), "core_degree")
+    )
 
 
 def bellman_ford(
@@ -668,41 +555,49 @@ def bellman_ford(
     Bellman-Ford relaxation — the weighted upgrade of bfs_distances.
 
     Treats edges as directed (symmetrize upstream for undirected
-    graphs); weights must be non-negative for the fixpoint to be the
-    true distance. Per round: one dist⋈edges join + a min aggregate
-    (the CC round budget), localCheckpoint-ed; the driver probe
-    counts changed vertices and stops at 0. Converges in ≤ (max
-    shortest-path hop count) rounds; raises on non-convergence so a
-    partial relaxation can never pass as the answer. Distances stay
-    exact integers when weights are integers."""
+    graphs); weights must be non-negative integers for the fixpoint to
+    be the true distance. Per round: one dist⋈edges join + a min
+    aggregate, iterated by ``_fixpoint`` with (count, Σ dist) as probe
+    — the reached set only grows and no dist ever increases, so an
+    unchanged pair means no vertex changed. Σ dist is summed as
+    decimal(38,0), exact for integer distances; a fractional weight
+    type raises TypeError, because a rounded sum could repeat while a
+    dist still falls. Converges in ≤ (max shortest-path hop count) + 1
+    rounds; raises RuntimeError on non-convergence so a partial
+    relaxation can never pass as the answer."""
     e = edges.select(
         F.col(src).alias("s"), F.col(dst).alias("d"), F.col(weight).alias("w")
-    ).localCheckpoint(eager=True)
+    )
+    w_type = e.schema["w"].dataType
+    if not isinstance(w_type, IntegralType):
+        raise TypeError(
+            f"bellman_ford: weight column {weight!r} must be integral, "
+            f"got {w_type.simpleString()}"
+        )
+    e = e.localCheckpoint(eager=True)
     dist = (
         e.sparkSession.createDataFrame(
             [(int(v), 0) for v in sources], "vertex long, dist long"
         )
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_rounds):
-        relaxed = (
+
+    def step(dist: DataFrame) -> DataFrame:
+        return (
             dist.join(e, dist.vertex == e.s)
-            .select(F.col("d").alias("vertex"), (F.col("dist") + F.col("w")).alias("dist"))
+            .select(
+                F.col("d").alias("vertex"),
+                (F.col("dist") + F.col("w")).alias("dist"),
+            )
             .unionByName(dist)
             .groupBy("vertex")
             .agg(F.min("dist").alias("dist"))
-            # lazy: the changed-count probe below materializes (and
-            # persists) the round's distances in the same job (r13)
-            .localCheckpoint(eager=False)
         )
-        changed = (
-            relaxed.join(
-                dist.withColumnRenamed("dist", "old"), "vertex", "left"
-            )
-            .where(F.col("old").isNull() | (F.col("dist") != F.col("old")))
-            .count()
-        )
-        dist = relaxed
-        if changed == 0:
-            return dist
-    raise RuntimeError(f"bellman_ford: no fixpoint within {max_rounds} rounds")
+
+    return _fixpoint(
+        dist,
+        step,
+        [F.count(F.lit(1)), F.sum(F.col("dist").cast("decimal(38,0)"))],
+        max_rounds,
+        "bellman_ford",
+    )

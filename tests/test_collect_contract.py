@@ -30,8 +30,7 @@ ALLOWED = {
     ("operators/kmeans.py", "update_centroids"): "n_cells centroid rows (k-means k)",
     ("operators/kmeans.py", "update_centroids_minibatch"): "k·dim partial rows (k-means k)",
     ("operators/merge.py", "merge_upsert"): "1-row inserted/updated metrics aggregate",
-    ("operators/graph.py", "connected_components"): "1-row convergence probe (sum of label changes)",
-    ("operators/graph.py", "connected_components_star._probe"): "1-row convergence probe",
+    ("operators/graph.py", "_fixpoint"): "1-row probe aggregate per round (connected_components, kcore, bellman_ford)",
     ("operators/similarity.py", "cosine_pairs_blocked"): "guarded: loud max_rows check precedes the collect",
     ("operators/similarity.py", "knn_cosine_bruteforce"): "guarded: loud rows×dim budget (max_query_rows×64 cells, r13) checked BEFORE the collect (r12 Arrow scoring kernel; same memory class as the broadcast relation it replaced)",
     ("operators/similarity.py", "kmeans_centroids"): "n_cells seed rows + n_cells centroid rows per iter",

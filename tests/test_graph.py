@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from reddit_hn_etl_spark.operators.graph import (
     connected_components,
     dedup_clusters,
@@ -12,13 +14,20 @@ def _edges(spark, pairs):
     return spark.createDataFrame(pairs, "doc_a long, doc_b long")
 
 
-def test_components_chains_and_islands(spark):
-    # chain 1-2-3-4, triangle 10-11-12, island pair 20-21
-    edges = _edges(spark, [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21)])
-    cc = {r.vertex: r.component for r in connected_components(edges).collect()}
-    assert {cc[1], cc[2], cc[3], cc[4]} == {1}
-    assert {cc[10], cc[11], cc[12]} == {10}
-    assert {cc[20], cc[21]} == {20}
+@pytest.mark.parametrize("offset", [0, 2**62], ids=["offset_0", "offset_2e62"])
+def test_components_chains_and_islands(spark, offset):
+    # 5-edge chain 1..6, triangle 10-11-12 merging with 13, island pair
+    # 20-21, self-loop-only vertex 30. At offset 2**62 the ids sum past
+    # 2**63: the convergence probe must not overflow a bigint.
+    pairs = [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6),
+             (10, 11), (11, 12), (10, 12), (12, 13),
+             (20, 21), (30, 30)]
+    edges = _edges(spark, [(a + offset, b + offset) for a, b in pairs])
+    cc = {r.vertex - offset: r.component - offset
+          for r in connected_components(edges).collect()}
+    assert cc == {**dict.fromkeys(range(1, 7), 1),
+                  **dict.fromkeys(range(10, 14), 10),
+                  20: 20, 21: 20, 30: 30}
 
 
 def test_dedup_clusters_transitive(spark):
@@ -36,16 +45,24 @@ def test_long_chain_converges(spark):
 
 
 def test_very_long_chain_converges_within_default_iters(spark):
-    """r13 pointer-jumping pin: a 200-vertex path has diameter 200 —
+    """Pointer-jumping pin: a 200-vertex path has diameter 200 —
     plain neighbor-min needs ~200 rounds and would exhaust the
-    default max_iter=20 SILENTLY (wrong labels, no error); with the
-    label-compression pass rounds are O(log diameter), so the default
-    budget converges to the true min label. Guards against losing
-    the jump pass in a refactor."""
+    default max_iter=20 (a RuntimeError); with the label-compression
+    pass rounds are O(log diameter), so the default budget converges
+    to the true min label. Guards against losing the jump pass in a
+    refactor."""
     n = 200
     edges = _edges(spark, [(i, i + 1) for i in range(n)])
     cc = {r.vertex: r.component for r in connected_components(edges).collect()}
     assert set(cc.values()) == {0} and len(cc) == n + 1
+
+
+def test_components_raise_when_max_iter_runs_out(spark):
+    # two rounds cannot settle a 200-vertex chain: wrong labels must
+    # never come back as an answer
+    edges = _edges(spark, [(i, i + 1) for i in range(200)])
+    with pytest.raises(RuntimeError, match="no fixpoint within 2 rounds"):
+        connected_components(edges, max_iter=2)
 
 
 def test_empty_edges(spark):
@@ -64,30 +81,6 @@ def test_keep_best_empty_cluster_set(spark):
         [(1, 0.5)], "doc_id long, quality_score double"
     )
     assert keep_best_per_cluster(cc, scores).count() == 0
-
-
-def test_star_components_match_minlabel(spark):
-    from reddit_hn_etl_spark.operators.graph import connected_components_star
-
-    # chain (worst case for min-label), merging cliques, island,
-    # self-loop-only vertex
-    edges = _edges(
-        spark,
-        [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6),
-         (10, 11), (11, 12), (10, 12), (12, 13),
-         (20, 21), (30, 30)],
-    )
-    a = {r.vertex: r.component for r in connected_components(edges).collect()}
-    b = {r.vertex: r.component
-         for r in connected_components_star(edges).collect()}
-    assert a == b
-    assert b[6] == 1 and b[13] == 10 and b[30] == 30
-
-
-def test_star_components_empty(spark):
-    from reddit_hn_etl_spark.operators.graph import connected_components_star
-
-    assert connected_components_star(_edges(spark, [])).count() == 0
 
 
 def test_triangle_stats_clique_pendant_star(spark):
@@ -356,6 +349,15 @@ def test_bellman_ford_matches_dijkstra(spark):
                 dist[v] = nd
                 heapq.heappush(pq, (nd, v))
     assert got == dist
+
+
+def test_bellman_ford_rejects_fractional_weights(spark):
+    # the Σ dist probe is exact only over integers
+    from reddit_hn_etl_spark.operators.graph import bellman_ford
+
+    df = spark.createDataFrame([(0, 1, 0.5)], "src long, dst long, w double")
+    with pytest.raises(TypeError, match="must be integral"):
+        bellman_ford(df, sources=[0])
 
 
 def test_kcore_self_loop_both_directions_dropped(spark):

@@ -536,24 +536,6 @@ def test_jaccard_pairs_match_brute_force(spark, docs, n):
         assert got == want, op.__name__
 
 
-@given(pairs=edges_strategy)
-@SET
-@pytest.mark.exhaustive
-def test_star_components_match_union_find(spark, pairs):
-    from reddit_hn_etl_spark.operators.graph import (
-        connected_components_star,
-    )
-
-    df = spark.createDataFrame(
-        pairs or [(0, 0)], "doc_a long, doc_b long"
-    )
-    got = {
-        r.vertex: r.component
-        for r in connected_components_star(df).collect()
-    }
-    assert got == _uf_components(pairs or [(0, 0)])
-
-
 def _brute_triangles(pairs):
     und = {tuple(sorted(p)) for p in pairs if p[0] != p[1]}
     verts = sorted({v for e in und for v in e})
